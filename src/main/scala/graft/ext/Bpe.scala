@@ -49,6 +49,9 @@ import org.apache.spark.sql.functions._
   */
 object Bpe {
 
+  @transient private lazy val log =
+    org.slf4j.LoggerFactory.getLogger("graft.ext.Bpe")
+
   /** One corpus pass → (word, cnt), the vocabulary-sized table all
     * rounds run on. */
   def wordCounts(docs: DataFrame, textCol: String): DataFrame =
@@ -281,9 +284,16 @@ object Bpe {
     val maxCollect = docs.sparkSession.conf
       .get("spark.graft.bpeEncodeMaxCollectWords", "10000000").toLong
     val collected =
-      if (impl == "local")
-        tryCollectWordTable(wordCounts(docs, textCol), maxCollect)
-      else None
+      if (impl != "local") None
+      else {
+        val rows = tryCollectWordTable(wordCounts(docs, textCol), maxCollect)
+        if (rows.isEmpty)
+          log.warn(s"bpeEncodeCounts: vocabulary exceeds $maxCollect " +
+            "distinct words (spark.graft.bpeEncodeMaxCollectWords); " +
+            "falling back from the local encode to the distributed " +
+            "rounds trainer")
+        rows
+      }
     val wordSyms =
       if (collected.isDefined) {
         val spark = docs.sparkSession

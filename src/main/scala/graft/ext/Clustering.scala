@@ -204,27 +204,17 @@ object Clustering {
           .as("purity"))
   }
 
-  /** Persist a trained codebook as a table — the
-    * [[Similarity.saveIvfIndex]] discipline for the clustering family:
-    * k rows, a marker property, so st14-style route gates reopen the
-    * model across jobs without retraining (and [[kmeansAssign]] stays
-    * O(batch) forever after). */
-  def saveCentroids(centroids: DataFrame, table: String): Unit = {
-    centroids.write.mode("overwrite").format("parquet").saveAsTable(table)
-    centroids.sparkSession.sql(
-      s"ALTER TABLE ${SqlIdent.quote(table)} SET TBLPROPERTIES " +
-        "('graft.kmeans.codebook'='1')")
-  }
+  /** Persist a trained codebook (k rows) as a table, so st14-style
+    * route gates reopen the model across jobs without retraining (and
+    * [[kmeansAssign]] stays O(batch) forever after). */
+  def saveCentroids(centroids: DataFrame, table: String): Unit =
+    StateTable.save(centroids, table, Seq("graft.kmeans.codebook" -> "1"))
 
-  /** Reopen a persisted codebook, refusing tables that are not one. */
+  /** Reopen a [[saveCentroids]] table. */
   def loadCentroids(spark: org.apache.spark.sql.SparkSession,
-                    table: String): DataFrame = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES ${SqlIdent.quote(table)}")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    require(props.get("graft.kmeans.codebook").contains("1"),
-      s"$table is not a graft k-means codebook table")
-    spark.table(table)
-  }
+                    table: String): DataFrame =
+    StateTable.load(spark, table, "k-means codebook",
+      marker = Some("graft.kmeans.codebook" -> "1"))._1
 
   /** Per-cluster prototype selection: the `perCell` most CENTRAL
     * members of each cluster (highest cosine to their centroid, id

@@ -688,36 +688,20 @@ object Dedup {
     * schemes. */
   def saveLshIndex(index: LshIndex, bandsTable: String, encTable: String,
                    buckets: Int = 16): Unit = {
-    index.bands.write.mode("overwrite")
-      .bucketBy(buckets, "band_key").sortBy("band_key")
-      .format("parquet").saveAsTable(bandsTable)
-    index.enc.write.mode("overwrite")
-      .bucketBy(buckets, "ex_id").sortBy("ex_id")
-      .format("parquet").saveAsTable(encTable)
-    val spark = index.bands.sparkSession
-    val props = s"'graft.lsh.n'='${index.n}', 'graft.lsh.k'='${index.k}', " +
-      s"'graft.lsh.bandRows'='${index.bandRows}'"
-    spark.sql(s"ALTER TABLE ${SqlIdent.quote(bandsTable)} SET TBLPROPERTIES ($props)")
-    spark.sql(s"ALTER TABLE ${SqlIdent.quote(encTable)} SET TBLPROPERTIES ($props)")
+    val props = Seq("graft.lsh.n" -> index.n, "graft.lsh.k" -> index.k,
+      "graft.lsh.bandRows" -> index.bandRows)
+    StateTable.save(index.bands, bandsTable, props, Seq("band_key"), buckets)
+    StateTable.save(index.enc, encTable, props, Seq("ex_id"), buckets)
   }
 
   /** Reopen a bucketed [[LshIndex]] written by [[saveLshIndex]],
     * restoring the signature parameters from the table properties. */
   def loadLshIndex(spark: org.apache.spark.sql.SparkSession,
                    bandsTable: String, encTable: String): LshIndex = {
-    def prop(table: String, key: String): Int = {
-      val rows = spark.sql(s"SHOW TBLPROPERTIES ${SqlIdent.quote(table)}").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      rows.getOrElse(key, sys.error(
-        s"$table is not a graft LSH index table (missing $key)")).toInt
-    }
-    val (n, k, bandRows) = (prop(bandsTable, "graft.lsh.n"),
-      prop(bandsTable, "graft.lsh.k"), prop(bandsTable, "graft.lsh.bandRows"))
-    require(prop(encTable, "graft.lsh.n") == n &&
-      prop(encTable, "graft.lsh.k") == k &&
-      prop(encTable, "graft.lsh.bandRows") == bandRows,
-      s"$bandsTable / $encTable carry different signature parameters")
-    LshIndex(spark.table(bandsTable), spark.table(encTable), n, k, bandRows)
+    val (bands, enc, Seq(n, k, bandRows)) = StateTable.loadPair(spark,
+      bandsTable, encTable, "LSH index", "signature",
+      Seq("graft.lsh.n", "graft.lsh.k", "graft.lsh.bandRows"))
+    LshIndex(bands, enc, n, k, bandRows)
   }
 
   /** Match one incoming batch against a prebuilt [[LshIndex]] — the
@@ -1030,23 +1014,15 @@ object Dedup {
     * must never be re-run because a second query wants the same
     * clusters. */
   def saveClusters(clusters: DataFrame, table: String,
-                   buckets: Int = 16): Unit = {
-    clusters.write.mode("overwrite")
-      .bucketBy(buckets, "doc_id").sortBy("doc_id")
-      .format("parquet").saveAsTable(table)
-    clusters.sparkSession.sql(
-      s"ALTER TABLE ${SqlIdent.quote(table)} SET TBLPROPERTIES ('graft.clusters'='1')")
-  }
+                   buckets: Int = 16): Unit =
+    StateTable.save(clusters, table, Seq("graft.clusters" -> "1"),
+      Seq("doc_id"), buckets)
 
   /** Reopen a bucketed cluster table written by [[saveClusters]]. */
   def loadClusters(spark: org.apache.spark.sql.SparkSession,
-                   table: String): DataFrame = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES ${SqlIdent.quote(table)}").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    require(props.get("graft.clusters").contains("1"),
-      s"$table is not a graft cluster table (missing graft.clusters)")
-    spark.table(table)
-  }
+                   table: String): DataFrame =
+    StateTable.load(spark, table, "cluster",
+      marker = Some("graft.clusters" -> "1"))._1
 
   /** Incremental cluster maintenance: fold a batch's new pairs into
     * persisted labels WITHOUT recomputing connected components over
@@ -1549,27 +1525,19 @@ object Dedup {
       index.legs + 1)
   }
 
-  /** Persist / reopen a [[WinnowIndex]] as a bucketed table (scheme in
-    * table properties — the saveLshIndex discipline). */
+  /** Persist / reopen a [[WinnowIndex]] as a bucketed table. */
   def saveWinnowIndex(index: WinnowIndex, table: String,
-                      buckets: Int = 16): Unit = {
-    index.sel.write.mode("overwrite")
-      .bucketBy(buckets, "h").sortBy("h")
-      .format("parquet").saveAsTable(table)
-    index.sel.sparkSession.sql(
-      s"ALTER TABLE ${SqlIdent.quote(table)} SET TBLPROPERTIES " +
-        s"('graft.winnow.k'='${index.k}', 'graft.winnow.w'='${index.w}', " +
-        s"'graft.winnow.dfCap'='${index.dfCap}')")
-  }
+                      buckets: Int = 16): Unit =
+    StateTable.save(index.sel, table, Seq("graft.winnow.k" -> index.k,
+      "graft.winnow.w" -> index.w, "graft.winnow.dfCap" -> index.dfCap),
+      Seq("h"), buckets)
 
   def loadWinnowIndex(spark: org.apache.spark.sql.SparkSession,
                       table: String): WinnowIndex = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES ${SqlIdent.quote(table)}")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    def prop(key: String): Int = props.getOrElse(key, sys.error(
-      s"$table is not a graft winnow index table (missing $key)")).toInt
-    WinnowIndex(spark.table(table), prop("graft.winnow.k"),
-      prop("graft.winnow.w"), prop("graft.winnow.dfCap"))
+    val keys = Seq("graft.winnow.k", "graft.winnow.w", "graft.winnow.dfCap")
+    val (sel, props) = StateTable.load(spark, table, "winnow index", keys)
+    val Seq(k, w, dfCap) = keys.map(props(_).toInt)
+    WinnowIndex(sel, k, w, dfCap)
   }
 
   /** Ingest-time EXACT-SUBSTRING gate: flag each incoming document

@@ -220,121 +220,44 @@ object Graph {
     r.select(col("node"), col("r").as("rank_micro"))
   }
 
-  /** Honor mode("overwrite") ACROSS sessions for the save* family: a
-    * prior session's managed table leaves its warehouse directory
-    * behind while the (in-memory) catalog forgets it, and saveAsTable
-    * then refuses with LOCATION_ALREADY_EXISTS even in overwrite mode.
-    * The caller asked for overwrite — drop the catalog entry, and
-    * delete the leftover location only when it is PROVABLY orphaned
-    * (round-19 ADVICE): the table must be absent from the catalog
-    * after the drop (a live entry that somehow survived is never
-    * deleted under it), and the path resolves through the CURRENT
-    * database's location — not a hard-coded default-db path that
-    * could destroy another database's live data when the session's
-    * current database is not 'default'.  (Unqualified table names
-    * only, which is what every save/load pair here takes.) */
-  private[ext] def prepareOverwrite(spark: org.apache.spark.sql.SparkSession,
-                               table: String): Unit = {
-    require(!table.contains("."),
-      s"save/load tables are unqualified names (got $table)")
-    spark.sql(s"DROP TABLE IF EXISTS ${SqlIdent.quote(table)}")
-    if (!spark.catalog.tableExists(table)) {
-      val dbLoc = spark.catalog
-        .getDatabase(spark.catalog.currentDatabase).locationUri
-      val path = new org.apache.hadoop.fs.Path(dbLoc,
-        table.toLowerCase(java.util.Locale.ROOT))
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(path)) fs.delete(path, true)
-    }
-  }
-
-  /** ONE marker/versioning convention for the five persisted-state
-    * families (edges / ranks / balls / components, plus Web's host
-    * state): every save stamps `TBLPROPERTIES ('graft.<family>' =
-    * '<version>')`, and every load requires the marker to be present
-    * AND to carry the exact version this build writes.  The version
-    * bumps whenever the on-disk SEMANTICS change (not the schema —
-    * parquet handles that): the round-18 rank rescale showed why a
-    * bare presence check is not enough — a `'1'`-era rank table
-    * read under the `'2'` per-node scale would silently warm-start a
-    * walk from values ~N× too small.  Any version mismatch therefore
-    * refuses with the family's rebuild hint instead of producing
-    * quietly wrong numbers. */
-  private[ext] def stampMarker(spark: org.apache.spark.sql.SparkSession,
-                               table: String, family: String,
-                               version: String): Unit =
-    spark.sql(
-      s"ALTER TABLE ${SqlIdent.quote(table)} SET TBLPROPERTIES " +
-        s"('graft.$family'='$version')")
-
-  private[ext] def requireMarker(spark: org.apache.spark.sql.SparkSession,
-                                 table: String, family: String,
-                                 version: String, what: String,
-                                 staleHint: String): DataFrame = {
-    val props = spark
-      .sql(s"SHOW TBLPROPERTIES ${SqlIdent.quote(table)}").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val got = props.get(s"graft.$family")
-    require(got.nonEmpty, s"$table is not a graft $what table")
-    require(got.contains(version),
-      s"$table carries graft.$family='${got.get}' but this build " +
-        s"reads version '$version' — $staleHint")
-    spark.table(table)
-  }
-
   /** Persist a cleaned edge table (src, dst — distinct, self-loops
     * dropped) bucketed on src, so [[pageRankMicroBucketed]]'s
     * per-sweep contrib join reads the edge side pre-partitioned and
     * never exchanges it — the on-disk analog of the broadcast walk's
     * "edge table never shuffles" contract, for graphs whose rank
-    * table is NOT broadcastable.  Marker property refuses non-edge
-    * tables on load — the [[stampMarker]] discipline. */
+    * table is NOT broadcastable. */
   def saveEdges(edges: DataFrame, srcCol: String, dstCol: String,
-                table: String, buckets: Int = 16): Unit = {
-    prepareOverwrite(edges.sparkSession, table)
-    cleanEdges(edges, srcCol, dstCol)
-      .write.mode("overwrite")
-      .bucketBy(buckets, "src").sortBy("src")
-      .format("parquet").saveAsTable(table)
-    stampMarker(edges.sparkSession, table, "edges", "1")
-  }
+                table: String, buckets: Int = 16): Unit =
+    StateTable.save(cleanEdges(edges, srcCol, dstCol), table,
+      Seq("graft.edges" -> "1"), Seq("src"), buckets)
 
-  /** Reopen a persisted edge table, refusing tables without the
-    * [[saveEdges]] marker or from a retired format version. */
+  /** Reopen a [[saveEdges]] table. */
   def loadEdges(spark: org.apache.spark.sql.SparkSession,
                 table: String): DataFrame =
-    requireMarker(spark, table, "edges", "1", "edge",
-      "re-persist the edge set with saveEdges")
+    StateTable.load(spark, table, "edge",
+      marker = Some("graft.edges" -> "1"),
+      hint = "re-persist the edge set with saveEdges")._1
 
   /** Persist a rank table (node, rank_micro) bucketed on the node so a
     * resumed walk's warm-start join and [[rankFrontier]]'s broadcast
-    * read pre-partitioned data.  Marker property refuses non-rank
-    * tables on load — the Indexes discipline.  Marker value `'2'`
-    * names the PER-NODE fixed-point scale (uniform rank == 1e6; the
-    * round-18 rescale): tables written under the retired total-mass
-    * scale carried `'1'`, and [[loadRanks]] refuses them rather than
-    * warm-starting a walk from values ~N× too small (round-18
-    * ADVICE). */
+    * read pre-partitioned data.  Marker value `'2'` names the PER-NODE
+    * fixed-point scale (uniform rank == 1e6; the round-18 rescale):
+    * tables written under the retired total-mass scale carried `'1'`,
+    * and [[loadRanks]] refuses them rather than warm-starting a walk
+    * from values ~N× too small. */
   def saveRanks(ranks: DataFrame, table: String,
-                buckets: Int = 16): Unit = {
-    prepareOverwrite(ranks.sparkSession, table)
-    ranks.select(col("node"), col("rank_micro"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "node").sortBy("node")
-      .format("parquet").saveAsTable(table)
-    stampMarker(ranks.sparkSession, table, "ranks", "2")
-  }
+                buckets: Int = 16): Unit =
+    StateTable.save(ranks.select(col("node"), col("rank_micro")), table,
+      Seq("graft.ranks" -> "2"), Seq("node"), buckets)
 
-  /** Reopen a persisted rank table, refusing tables without the
-    * [[saveRanks]] marker — including `'1'`-marked tables from the
-    * retired total-mass-1e6 scale, whose values would silently skew a
-    * resumed walk (they are ~N× below the per-node scale). */
+  /** Reopen a [[saveRanks]] table. */
   def loadRanks(spark: org.apache.spark.sql.SparkSession,
                 table: String): DataFrame =
-    requireMarker(spark, table, "ranks", "2", "rank",
-      "a retired total-mass-scale table's values are ~N× below the " +
-        "per-node scale; recompute it under the per-node scale " +
-        "with saveRanks")
+    StateTable.load(spark, table, "rank",
+      marker = Some("graft.ranks" -> "2"),
+      hint = "a retired total-mass-scale table's values are ~N× below " +
+        "the per-node scale; recompute it under the per-node scale " +
+        "with saveRanks")._1
 
   /** One synchronous PageRank sweep, lazily (the loop in
     * [[pageRankMicro]] checkpoints each result; PlanAuditSpec audits
@@ -769,25 +692,19 @@ object Graph {
 
   /** Persist a per-radius HyperBall state (node, r, ball) bucketed on
     * the node — the cross-cycle form [[harmonicBallsFrom]] resumes
-    * from.  Marker property refuses non-ball tables on load — the
-    * [[saveRanks]] discipline. */
+    * from. */
   def saveBalls(state: DataFrame, table: String,
-                buckets: Int = 16): Unit = {
-    prepareOverwrite(state.sparkSession, table)
-    state.select(col("node"), col("r"), col("ball"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "node").sortBy("node")
-      .format("parquet").saveAsTable(table)
-    stampMarker(state.sparkSession, table, "balls", "1")
-  }
+                buckets: Int = 16): Unit =
+    StateTable.save(state.select(col("node"), col("r"), col("ball")), table,
+      Seq("graft.balls" -> "1"), Seq("node"), buckets)
 
-  /** Reopen a persisted HyperBall state, refusing tables without the
-    * [[saveBalls]] marker or from a retired format version. */
+  /** Reopen a [[saveBalls]] table. */
   def loadBalls(spark: org.apache.spark.sql.SparkSession,
                 table: String): DataFrame =
-    requireMarker(spark, table, "balls", "1", "HyperBall state",
-      "a stale-format ball table cannot seed a warm walk; rebuild " +
-        "it with harmonicBalls + saveBalls")
+    StateTable.load(spark, table, "HyperBall state",
+      marker = Some("graft.balls" -> "1"),
+      hint = "a stale-format ball table cannot seed a warm walk; " +
+        "rebuild it with harmonicBalls + saveBalls")._1
 
   /** Mutual-link (reciprocity) rollup — the TrustRank-era link-farm
     * signal: organically linked hosts rarely link BACK (news →
@@ -895,26 +812,19 @@ object Graph {
 
   /** Persist a component labeling (host, component_rep) bucketed on
     * the host — the cross-cycle form [[hostComponentsFrom]] resumes
-    * from.  Marker property refuses non-component tables on load —
-    * the [[saveRanks]] discipline. */
+    * from. */
   def saveComponents(components: DataFrame, table: String,
-                     buckets: Int = 16): Unit = {
-    prepareOverwrite(components.sparkSession, table)
-    components.select(col("host"), col("component_rep"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "host").sortBy("host")
-      .format("parquet").saveAsTable(table)
-    stampMarker(components.sparkSession, table, "components", "1")
-  }
+                     buckets: Int = 16): Unit =
+    StateTable.save(components.select(col("host"), col("component_rep")),
+      table, Seq("graft.components" -> "1"), Seq("host"), buckets)
 
-  /** Reopen a persisted component labeling, refusing tables without
-    * the [[saveComponents]] marker or from a retired format
-    * version. */
+  /** Reopen a [[saveComponents]] table. */
   def loadComponents(spark: org.apache.spark.sql.SparkSession,
                      table: String): DataFrame =
-    requireMarker(spark, table, "components", "1", "component",
-      "a stale-format labeling cannot seed the warm fixpoint; " +
-        "rebuild it with hostComponents + saveComponents")
+    StateTable.load(spark, table, "component",
+      marker = Some("graft.components" -> "1"),
+      hint = "a stale-format labeling cannot seed the warm fixpoint; " +
+        "rebuild it with hostComponents + saveComponents")._1
 
   /** Frontier prioritization: annotate gate verdicts (any DataFrame
     * carrying a canonical-URL column — [[Web.frontierGate]] /

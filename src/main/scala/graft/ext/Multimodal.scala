@@ -697,26 +697,17 @@ object Multimodal {
   /** Persist a [[MediaFpIndex]] as a parquet table bucketed by block
     * key — the probe join's locality survives a restart, and
     * `maskBlocks` rides along in table properties so a reopened index
-    * cannot silently mix band schemes (the `saveLshIndex` contract). */
+    * cannot silently mix band schemes. */
   def saveFpIndex(index: MediaFpIndex, table: String,
-                  buckets: Int = 16): Unit = {
-    index.blocked.write.mode("overwrite")
-      .bucketBy(buckets, "bk").sortBy("bk")
-      .format("parquet").saveAsTable(table)
-    index.blocked.sparkSession.sql(
-      s"ALTER TABLE ${graft.ext.SqlIdent.quote(table)} SET TBLPROPERTIES " +
-        s"('graft.fp.maskBlocks'='${index.maskBlocks}')")
-  }
+                  buckets: Int = 16): Unit =
+    StateTable.save(index.blocked, table,
+      Seq("graft.fp.maskBlocks" -> index.maskBlocks), Seq("bk"), buckets)
 
   /** Reopen a bucketed [[MediaFpIndex]] written by [[saveFpIndex]]. */
   def loadFpIndex(spark: SparkSession, table: String): MediaFpIndex = {
-    val props = spark.sql(
-      s"SHOW TBLPROPERTIES ${graft.ext.SqlIdent.quote(table)}").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val mb = props.getOrElse("graft.fp.maskBlocks", sys.error(
-      s"$table is not a graft media fingerprint index " +
-        "(missing graft.fp.maskBlocks)")).toInt
-    MediaFpIndex(spark.table(table), mb)
+    val (blocked, props) = StateTable.load(spark, table,
+      "media fingerprint index", Seq("graft.fp.maskBlocks"))
+    MediaFpIndex(blocked, props("graft.fp.maskBlocks").toInt)
   }
 
   /** media rows → (media_id, frame_hex), each frame carried as its

@@ -171,25 +171,18 @@ object QualityModel {
   /** Persist a trained [[dsirModel]] as a table with its feature
     * dimension in table properties — the ingest gate then scores
     * months of micro-batches against a model trained once, across
-    * restarts (the saveLshIndex/saveIvfIndex discipline; no bucketing
-    * needed — the model is dim rows and always broadcasts). */
-  def saveDsirModel(model: DataFrame, table: String, dim: Int): Unit = {
-    model.write.mode("overwrite").format("parquet").saveAsTable(table)
-    model.sparkSession.sql(
-      s"ALTER TABLE ${SqlIdent.quote(table)} SET TBLPROPERTIES " +
-        s"('graft.dsir.dim'='$dim')")
-  }
+    * restarts (no bucketing needed — the model is dim rows and always
+    * broadcasts). */
+  def saveDsirModel(model: DataFrame, table: String, dim: Int): Unit =
+    StateTable.save(model, table, Seq("graft.dsir.dim" -> dim))
 
   /** Reopen a persisted DSIR model, restoring `dim` from the table
-    * properties and refusing non-model tables.  Returns (model, dim) —
-    * pass both to [[dsirScoreWith]]. */
+    * properties.  Returns (model, dim) — pass both to
+    * [[dsirScoreWith]]. */
   def loadDsirModel(spark: SparkSession, table: String): (DataFrame, Int) = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES ${SqlIdent.quote(table)}")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val dim = props.getOrElse("graft.dsir.dim", sys.error(
-      s"$table is not a graft DSIR model table (missing graft.dsir.dim)"))
-      .toInt
-    (spark.table(table), dim)
+    val (model, props) = StateTable.load(spark, table, "DSIR model",
+      Seq("graft.dsir.dim"))
+    (model, props("graft.dsir.dim").toInt)
   }
 
   /** Score a document batch against a trained [[dsirModel]] —
@@ -410,26 +403,17 @@ object QualityModel {
   }
 
   /** Persist a trained [[trainQualityModel]] weight table with its
-    * feature dimension in table properties (the saveDsirModel
-    * discipline) — score months of batches against a model trained
-    * once, across restarts. */
-  def saveQualityModel(model: DataFrame, table: String, dim: Int): Unit = {
-    model.write.mode("overwrite").format("parquet").saveAsTable(table)
-    model.sparkSession.sql(
-      s"ALTER TABLE ${SqlIdent.quote(table)} SET TBLPROPERTIES " +
-        s"('graft.qm.dim'='$dim')")
-  }
+    * feature dimension in table properties — score months of batches
+    * against a model trained once, across restarts. */
+  def saveQualityModel(model: DataFrame, table: String, dim: Int): Unit =
+    StateTable.save(model, table, Seq("graft.qm.dim" -> dim))
 
-  /** Reopen a persisted quality model, restoring `dim` and refusing
-    * non-model tables.  Returns (model, dim) — pass both to
-    * [[scoreWith]]. */
+  /** Reopen a persisted quality model, restoring `dim`.  Returns
+    * (model, dim) — pass both to [[scoreWith]]. */
   def loadQualityModel(spark: SparkSession,
                        table: String): (DataFrame, Int) = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES ${SqlIdent.quote(table)}")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val dim = props.getOrElse("graft.qm.dim", sys.error(
-      s"$table is not a graft quality-model table (missing graft.qm.dim)"))
-      .toInt
-    (spark.table(table), dim)
+    val (model, props) = StateTable.load(spark, table, "quality-model",
+      Seq("graft.qm.dim"))
+    (model, props("graft.qm.dim").toInt)
   }
 }

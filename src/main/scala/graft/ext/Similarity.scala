@@ -493,34 +493,21 @@ object Similarity {
     * query-batch side shuffles), parameters in table properties. */
   def saveIvfIndex(index: IvfIndex, assignedTable: String,
                    centTable: String, buckets: Int = 16): Unit = {
-    index.assigned.write.mode("overwrite")
-      .bucketBy(buckets, "cell").sortBy("cell")
-      .format("parquet").saveAsTable(assignedTable)
-    index.cent.write.mode("overwrite")
-      .format("parquet").saveAsTable(centTable)
-    val spark = index.assigned.sparkSession
-    val props = s"'graft.ivf.dim'='${index.dim}', " +
-      s"'graft.ivf.nlist'='${index.nlist}'"
-    spark.sql(s"ALTER TABLE ${SqlIdent.quote(assignedTable)} SET TBLPROPERTIES ($props)")
-    spark.sql(s"ALTER TABLE ${SqlIdent.quote(centTable)} SET TBLPROPERTIES ($props)")
+    val props = Seq("graft.ivf.dim" -> index.dim,
+      "graft.ivf.nlist" -> index.nlist)
+    StateTable.save(index.assigned, assignedTable, props, Seq("cell"),
+      buckets)
+    StateTable.save(index.cent, centTable, props)
   }
 
   /** Reopen a persisted [[IvfIndex]], restoring (dim, nlist) from the
-    * table properties and refusing mismatched tables. */
-  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                   assignedTable: String, centTable: String): IvfIndex = {
-    def prop(table: String, key: String): Int = {
-      val rows = spark.sql(s"SHOW TBLPROPERTIES ${SqlIdent.quote(table)}").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      rows.getOrElse(key, sys.error(
-        s"$table is not a graft IVF index table (missing $key)")).toInt
-    }
-    val (dim, nlist) =
-      (prop(assignedTable, "graft.ivf.dim"), prop(assignedTable, "graft.ivf.nlist"))
-    require(prop(centTable, "graft.ivf.dim") == dim &&
-      prop(centTable, "graft.ivf.nlist") == nlist,
-      s"$assignedTable / $centTable carry different IVF parameters")
-    IvfIndex(spark.table(assignedTable), spark.table(centTable), dim, nlist)
+    * table properties. */
+  def loadIvfIndex(spark: SparkSession, assignedTable: String,
+                   centTable: String): IvfIndex = {
+    val (assigned, cent, Seq(dim, nlist)) = StateTable.loadPair(spark,
+      assignedTable, centTable, "IVF index", "IVF",
+      Seq("graft.ivf.dim", "graft.ivf.nlist"))
+    IvfIndex(assigned, cent, dim, nlist)
   }
 
   /** Grow an [[IvfIndex]] with a batch of accepted vectors — the
@@ -1028,16 +1015,11 @@ object Similarity {
     * [[saveIvfIndex]]); parameters in table properties. */
   def savePqIndex(index: PqIndex, codesTable: String,
                   codebookTable: String, buckets: Int = 16): Unit = {
-    index.codes.write.mode("overwrite")
-      .bucketBy(buckets, "s", "code").sortBy("s", "code")
-      .format("parquet").saveAsTable(codesTable)
-    index.codebook.write.mode("overwrite")
-      .format("parquet").saveAsTable(codebookTable)
-    val spark = index.codes.sparkSession
-    val props = s"'graft.pq.dim'='${index.dim}', " +
-      s"'graft.pq.m'='${index.m}', 'graft.pq.k'='${index.k}'"
-    spark.sql(s"ALTER TABLE ${SqlIdent.quote(codesTable)} SET TBLPROPERTIES ($props)")
-    spark.sql(s"ALTER TABLE ${SqlIdent.quote(codebookTable)} SET TBLPROPERTIES ($props)")
+    val props = Seq("graft.pq.dim" -> index.dim, "graft.pq.m" -> index.m,
+      "graft.pq.k" -> index.k)
+    StateTable.save(index.codes, codesTable, props, Seq("s", "code"),
+      buckets)
+    StateTable.save(index.codebook, codebookTable, props)
   }
 
   /** Grow a [[PqIndex]] with a batch of accepted vectors — the
@@ -1156,21 +1138,12 @@ object Similarity {
   }
 
   /** Reopen a persisted [[PqIndex]], restoring (dim, m, k) from table
-    * properties and refusing mismatched tables. */
-  def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
-                  codesTable: String, codebookTable: String): PqIndex = {
-    def prop(table: String, key: String): Int = {
-      val rows = spark.sql(s"SHOW TBLPROPERTIES ${SqlIdent.quote(table)}").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      rows.getOrElse(key, sys.error(
-        s"$table is not a graft PQ index table (missing $key)")).toInt
-    }
-    val (dim, m, k) = (prop(codesTable, "graft.pq.dim"),
-      prop(codesTable, "graft.pq.m"), prop(codesTable, "graft.pq.k"))
-    require(prop(codebookTable, "graft.pq.dim") == dim &&
-      prop(codebookTable, "graft.pq.m") == m &&
-      prop(codebookTable, "graft.pq.k") == k,
-      s"$codesTable / $codebookTable carry different PQ parameters")
-    PqIndex(spark.table(codesTable), spark.table(codebookTable), dim, m, k)
+    * properties. */
+  def loadPqIndex(spark: SparkSession, codesTable: String,
+                  codebookTable: String): PqIndex = {
+    val (codes, codebook, Seq(dim, m, k)) = StateTable.loadPair(spark,
+      codesTable, codebookTable, "PQ index", "PQ",
+      Seq("graft.pq.dim", "graft.pq.m", "graft.pq.k"))
+    PqIndex(codes, codebook, dim, m, k)
   }
 }

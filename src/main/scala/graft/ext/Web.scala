@@ -726,31 +726,19 @@ object Web {
     } else UrlIndex(grown, index.legs + 1)
   }
 
-  /** Persist a [[UrlIndex]] BUCKETED by the canonical URL, with a
-    * marker property so non-index tables are refused on load — the
+  /** Persist a [[UrlIndex]] BUCKETED by the canonical URL — the
     * cross-restart form: later probes read the corpus-sized side
     * pre-partitioned off the scan and never shuffle it again. */
   def saveUrlIndex(index: UrlIndex, table: String,
-                   buckets: Int = 16): Unit = {
-    index.urls.write.mode("overwrite")
-      .bucketBy(buckets, "url_canon").sortBy("url_canon")
-      .format("parquet").saveAsTable(table)
-    index.urls.sparkSession.sql(
-      s"ALTER TABLE ${SqlIdent.quote(table)} SET TBLPROPERTIES " +
-        "('graft.seenset'='1')")
-  }
+                   buckets: Int = 16): Unit =
+    StateTable.save(index.urls, table, Seq("graft.seenset" -> "1"),
+      Seq("url_canon"), buckets)
 
-  /** Reopen a persisted [[UrlIndex]], refusing tables without the
-    * [[saveUrlIndex]] marker. */
+  /** Reopen a [[saveUrlIndex]] table. */
   def loadUrlIndex(spark: org.apache.spark.sql.SparkSession,
-                   table: String): UrlIndex = {
-    val props = spark
-      .sql(s"SHOW TBLPROPERTIES ${SqlIdent.quote(table)}").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    require(props.get("graft.seenset").contains("1"),
-      s"$table is not a graft URL index table")
-    UrlIndex(spark.table(table))
-  }
+                   table: String): UrlIndex =
+    UrlIndex(StateTable.load(spark, table, "URL index",
+      marker = Some("graft.seenset" -> "1"))._1)
 
   /** Ingest-time URL dedup gate: each incoming doc's canonical URL is
     * probed against the seen set; unseen → `novel = true` (fetch it),
@@ -932,34 +920,21 @@ object Web {
 
   /** Persist a [[UrlModIndex]] BUCKETED by the canonical URL — the
     * cross-restart form of the freshness seen-set, compacted to one
-    * max-mod row per URL on write.  Marker property refuses non-index
-    * tables on load (the [[saveUrlIndex]] contract; the marker key
-    * avoids the token "url" so SHOW TBLPROPERTIES does not redact the
-    * value). */
+    * max-mod row per URL on write.  The marker key avoids the token
+    * "url" because SHOW TBLPROPERTIES redacts the values of keys that
+    * match `spark.sql.redaction.options.regex` (default `(?i)url`). */
   def saveUrlModIndex(index: UrlModIndex, table: String,
-                      buckets: Int = 16): Unit = {
-    index.urls
-      .groupBy(col("url_canon"))
-      .agg(max(col("last_seen_mod")).as("last_seen_mod"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "url_canon").sortBy("url_canon")
-      .format("parquet").saveAsTable(table)
-    index.urls.sparkSession.sql(
-      s"ALTER TABLE ${SqlIdent.quote(table)} SET TBLPROPERTIES " +
-        "('graft.seenset.mod'='1')")
-  }
+                      buckets: Int = 16): Unit =
+    StateTable.save(index.urls
+        .groupBy(col("url_canon"))
+        .agg(max(col("last_seen_mod")).as("last_seen_mod")),
+      table, Seq("graft.seenset.mod" -> "1"), Seq("url_canon"), buckets)
 
-  /** Reopen a persisted [[UrlModIndex]], refusing tables without the
-    * [[saveUrlModIndex]] marker. */
+  /** Reopen a [[saveUrlModIndex]] table. */
   def loadUrlModIndex(spark: org.apache.spark.sql.SparkSession,
-                      table: String): UrlModIndex = {
-    val props = spark
-      .sql(s"SHOW TBLPROPERTIES ${SqlIdent.quote(table)}").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    require(props.get("graft.seenset.mod").contains("1"),
-      s"$table is not a graft URL freshness-index table")
-    UrlModIndex(spark.table(table))
-  }
+                      table: String): UrlModIndex =
+    UrlModIndex(StateTable.load(spark, table, "URL freshness-index",
+      marker = Some("graft.seenset.mod" -> "1"))._1)
 
   /** The lastmod-aware recrawl verdict — [[urlNoveltyGate]] extended
     * to `fetch = novel ∨ updated` (round-16 verdict #5): a candidate
@@ -1020,28 +995,19 @@ object Web {
 
   /** Persist the cross-cycle politeness state (host, next_eta_sec) —
     * one snapshot row per host, bucketed on the host so a resumed
-    * schedule's state join reads pre-partitioned.  Versioned marker
-    * property refuses non-state and stale-format tables on load —
-    * the [[Graph.stampMarker]] convention shared by the five
-    * persisted-state families. */
+    * schedule's state join reads pre-partitioned. */
   def saveHostState(state: DataFrame, table: String,
-                    buckets: Int = 16): Unit = {
-    Graph.prepareOverwrite(state.sparkSession, table)
-    state.select(col("host"), col("next_eta_sec"))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "host").sortBy("host")
-      .format("parquet").saveAsTable(table)
-    Graph.stampMarker(state.sparkSession, table, "hoststate", "1")
-  }
+                    buckets: Int = 16): Unit =
+    StateTable.save(state.select(col("host"), col("next_eta_sec")), table,
+      Seq("graft.hoststate" -> "1"), Seq("host"), buckets)
 
-  /** Reopen a persisted politeness state, refusing tables without the
-    * [[saveHostState]] marker or from a retired format version. */
+  /** Reopen a [[saveHostState]] table. */
   def loadHostState(spark: org.apache.spark.sql.SparkSession,
                     table: String): DataFrame =
-    Graph.requireMarker(spark, table, "hoststate", "1",
-      "politeness-state",
-      "a stale-format snapshot cannot offset a resumed schedule; " +
-        "rebuild it with politenessStateAfter + saveHostState")
+    StateTable.load(spark, table, "politeness-state",
+      marker = Some("graft.hoststate" -> "1"),
+      hint = "a stale-format snapshot cannot offset a resumed schedule; " +
+        "rebuild it with politenessStateAfter + saveHostState")._1
 
   /** [[politenessSchedule]] RESUMED from a prior cycle's state: same
     * cap/slot/delay algebra, but each host's etas start at its

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.Graph
 
@@ -516,34 +517,184 @@ class GraphSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
   }
 
-  test("every persisted-state family refuses a STALE-VERSION marker " +
-    "(the rank-table incident generalized: a format change must " +
-    "refuse old tables, not silently read them)") {
-    def staleTable(name: String, family: String,
-                   df: org.apache.spark.sql.DataFrame): Unit = {
-      dropTableFully(name)
-      df.write.format("parquet").saveAsTable(name)
-      spark.sql(
-        s"ALTER TABLE $name SET TBLPROPERTIES ('graft.$family'='0')")
+  /** One persisted-state family: a sample state saved by `save` and
+    * reopened by `load` (tables and restored parameters), the `what`
+    * its refusals name, and the marker key of a versioned family.
+    * Two-table families store the second table under `<name>_b`. */
+  private case class Family(what: String, tables: String => Seq[String],
+                            save: String => Unit,
+                            load: String => (Seq[DataFrame], Seq[Int]),
+                            params: Seq[Int], samples: Seq[DataFrame],
+                            versioned: Option[String] = None)
+
+  private def rows(df: DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case x => x
+    }).toSet
+
+  private lazy val families: Seq[Family] = {
+    import graft.ext.{Clustering, Dedup, Multimodal, QualityModel,
+      Similarity, Web}
+    val one = (t: String) => Seq(t)
+    val two = (t: String) => Seq(t, s"${t}_b")
+    val ivfA = Seq((0L, 1L, Seq(1.0, 0.0), 1.0))
+      .toDF("cell", "c_id", "c", "c_norm")
+    val ivfC = Seq((0L, Seq(1.0, 0.0), 1.0)).toDF("cell", "cv", "cv_norm")
+    val pqCodes = Seq((0, 2, 1L), (1, 0, 1L)).toDF("s", "code", "c_id")
+    val pqCb = Seq((0, 2, Seq(0.5, 0.5))).toDF("s", "j", "cbv")
+    val bands = Seq((7L, 1L)).toDF("band_key", "ex_id")
+    val enc = Seq((1L, 4)).toDF("ex_id", "se")
+    val sel = Seq((1L, 99L)).toDF("ex_id", "h")
+    val cent = Seq((0L, Seq(1.0, 0.0))).toDF("cell", "cv")
+    val clusters = Seq((1L, 1L), (2L, 1L)).toDF("doc_id", "cluster_id")
+    val dsir = Seq((0L, 0.25)).toDF("bucket", "__lr")
+    val qm = Seq((3L, -0.5)).toDF("bucket", "w")
+    val urls = Seq("http://a.com/x").toDF("url_canon")
+    val urlMods = Seq(("http://a.com/x", 5L)).toDF("url_canon", "last_seen_mod")
+    val blocked = Seq((1L, 42L, 9L)).toDF("ex_id", "fp_ex", "bk")
+    val edges = Seq(("a", "b")).toDF("src", "dst")
+    val ranks = Seq(("a", 1000000L)).toDF("node", "rank_micro")
+    val balls = Seq(("a", 1, Array[Byte](1, 2))).toDF("node", "r", "ball")
+    val comps = Seq(("a.com", "a.com")).toDF("host", "component_rep")
+    val hosts = Seq(("a.com", 1.5)).toDF("host", "next_eta_sec")
+    Seq(
+      Family("IVF index", two,
+        t => Similarity.saveIvfIndex(
+          Similarity.IvfIndex(ivfA, ivfC, 2, 3), t, s"${t}_b", buckets = 2),
+        t => { val i = Similarity.loadIvfIndex(spark, t, s"${t}_b")
+          (Seq(i.assigned, i.cent), Seq(i.dim, i.nlist)) },
+        Seq(2, 3), Seq(ivfA, ivfC)),
+      Family("PQ index", two,
+        t => Similarity.savePqIndex(
+          Similarity.PqIndex(pqCodes, pqCb, 4, 2, 3), t, s"${t}_b",
+          buckets = 2),
+        t => { val i = Similarity.loadPqIndex(spark, t, s"${t}_b")
+          (Seq(i.codes, i.codebook), Seq(i.dim, i.m, i.k)) },
+        Seq(4, 2, 3), Seq(pqCodes, pqCb)),
+      Family("LSH index", two,
+        t => Dedup.saveLshIndex(Dedup.LshIndex(bands, enc, 2, 3, 1),
+          t, s"${t}_b", buckets = 2),
+        t => { val i = Dedup.loadLshIndex(spark, t, s"${t}_b")
+          (Seq(i.bands, i.enc), Seq(i.n, i.k, i.bandRows)) },
+        Seq(2, 3, 1), Seq(bands, enc)),
+      Family("winnow index", one,
+        t => Dedup.saveWinnowIndex(Dedup.WinnowIndex(sel, 5, 4, 9), t,
+          buckets = 2),
+        t => { val i = Dedup.loadWinnowIndex(spark, t)
+          (Seq(i.sel), Seq(i.k, i.w, i.dfCap)) },
+        Seq(5, 4, 9), Seq(sel)),
+      Family("k-means codebook", one,
+        t => Clustering.saveCentroids(cent, t),
+        t => (Seq(Clustering.loadCentroids(spark, t)), Nil),
+        Nil, Seq(cent)),
+      Family("cluster", one,
+        t => Dedup.saveClusters(clusters, t, buckets = 2),
+        t => (Seq(Dedup.loadClusters(spark, t)), Nil),
+        Nil, Seq(clusters)),
+      Family("DSIR model", one,
+        t => QualityModel.saveDsirModel(dsir, t, dim = 8),
+        t => { val (m, d) = QualityModel.loadDsirModel(spark, t)
+          (Seq(m), Seq(d)) },
+        Seq(8), Seq(dsir)),
+      Family("quality-model", one,
+        t => QualityModel.saveQualityModel(qm, t, dim = 16),
+        t => { val (m, d) = QualityModel.loadQualityModel(spark, t)
+          (Seq(m), Seq(d)) },
+        Seq(16), Seq(qm)),
+      Family("URL index", one,
+        t => Web.saveUrlIndex(Web.UrlIndex(urls), t, buckets = 2),
+        t => (Seq(Web.loadUrlIndex(spark, t).urls), Nil),
+        Nil, Seq(urls)),
+      Family("URL freshness-index", one,
+        t => Web.saveUrlModIndex(Web.UrlModIndex(urlMods), t, buckets = 2),
+        t => (Seq(Web.loadUrlModIndex(spark, t).urls), Nil),
+        Nil, Seq(urlMods)),
+      Family("media fingerprint index", one,
+        t => Multimodal.saveFpIndex(Multimodal.MediaFpIndex(blocked, 3), t,
+          buckets = 2),
+        t => { val i = Multimodal.loadFpIndex(spark, t)
+          (Seq(i.blocked), Seq(i.maskBlocks)) },
+        Seq(3), Seq(blocked)),
+      Family("edge", one,
+        t => Graph.saveEdges(edges, "src", "dst", t, buckets = 2),
+        t => (Seq(Graph.loadEdges(spark, t)), Nil),
+        Nil, Seq(edges), Some("graft.edges")),
+      Family("rank", one,
+        t => Graph.saveRanks(ranks, t, buckets = 2),
+        t => (Seq(Graph.loadRanks(spark, t)), Nil),
+        Nil, Seq(ranks), Some("graft.ranks")),
+      Family("HyperBall state", one,
+        t => Graph.saveBalls(balls, t, buckets = 2),
+        t => (Seq(Graph.loadBalls(spark, t)), Nil),
+        Nil, Seq(balls), Some("graft.balls")),
+      Family("component", one,
+        t => Graph.saveComponents(comps, t, buckets = 2),
+        t => (Seq(Graph.loadComponents(spark, t)), Nil),
+        Nil, Seq(comps), Some("graft.components")),
+      Family("politeness-state", one,
+        t => Web.saveHostState(hosts, t, buckets = 2),
+        t => (Seq(Web.loadHostState(spark, t)), Nil),
+        Nil, Seq(hosts), Some("graft.hoststate")))
+  }
+
+  private def assertRoundTrip(f: Family, t: String): Unit = {
+    val (loaded, params) = f.load(t)
+    assert(params === f.params, f.what)
+    assert(loaded.map(rows) === f.samples.map(rows), f.what)
+  }
+
+  test("all 16 state families: round trip, plain and stale refusal") {
+    assert(families.size === 16)
+    families.zipWithIndex.foreach { case (f, i) =>
+      val t = s"fam_$i"
+      f.tables(t).foreach(dropTableFully)
+      f.save(t)
+      assertRoundTrip(f, t)
+      // a plain table (no graft properties) is refused, naming the family
+      f.tables(t).foreach(dropTableFully)
+      Seq((1L, "x")).toDF("id", "v").write.format("parquet").saveAsTable(t)
+      val plain = intercept[IllegalArgumentException](f.load(t))
+      assert(plain.getMessage.contains(s"not a graft ${f.what} table"),
+        plain.getMessage)
+      // the rank-table incident generalized: a format change must
+      // refuse old tables, not silently read them
+      f.versioned.foreach { key =>
+        spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES ('$key'='0')")
+        val stale = intercept[IllegalArgumentException](f.load(t))
+        assert(stale.getMessage.contains("version '"), stale.getMessage)
+      }
+      dropTableFully(t)
     }
-    staleTable("stale_edges", "edges", Seq(("a", "b")).toDF("src", "dst"))
-    staleTable("stale_ranks", "ranks", Seq(("a", 1L)).toDF("node", "rank_micro"))
-    staleTable("stale_balls", "balls",
-      Seq(("a", 0, Array[Byte](1))).toDF("node", "r", "ball"))
-    staleTable("stale_comps", "components",
-      Seq(("a", "a")).toDF("host", "component_rep"))
-    staleTable("stale_hstate", "hoststate",
-      Seq(("a", 1.0)).toDF("host", "next_eta_sec"))
-    def refusedStale(f: => Any): Unit = {
-      val err = intercept[IllegalArgumentException](f)
-      assert(err.getMessage.contains("stale") ||
-        err.getMessage.contains("version '"), err.getMessage)
+  }
+
+  test("every state family saves over an orphaned warehouse directory " +
+    "(one left behind when the catalog forgot the table)") {
+    val warehouse = new java.io.File(new java.net.URI(
+      spark.conf.get("spark.sql.warehouse.dir")).getPath)
+    families.zipWithIndex.foreach { case (f, i) =>
+      val t = s"orphan_$i"
+      f.tables(t).foreach { name =>
+        dropTableFully(name)
+        spark.range(1).write.parquet(new java.io.File(warehouse, name).toString)
+        assert(!spark.catalog.tableExists(name))
+      }
+      f.save(t)
+      assertRoundTrip(f, t)
+      f.tables(t).foreach(dropTableFully)
     }
-    refusedStale(Graph.loadEdges(spark, "stale_edges"))
-    refusedStale(Graph.loadRanks(spark, "stale_ranks"))
-    refusedStale(Graph.loadBalls(spark, "stale_balls"))
-    refusedStale(Graph.loadComponents(spark, "stale_comps"))
-    refusedStale(graft.ext.Web.loadHostState(spark, "stale_hstate"))
+  }
+
+  test("saving a state back over the table it was loaded from is " +
+    "refused and leaves the table readable") {
+    dropTableFully("self_ranks")
+    Graph.saveRanks(Seq(("a", 7L)).toDF("node", "rank_micro"), "self_ranks")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Graph.saveRanks(Graph.loadRanks(spark, "self_ranks"), "self_ranks")
+    }
+    assert(Graph.loadRanks(spark, "self_ranks").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq === Seq("a" -> 7L))
+    dropTableFully("self_ranks")
   }
 
   test("rankFrontier: rank joins by canonical host; hosts the rank " +

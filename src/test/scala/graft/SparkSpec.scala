@@ -29,8 +29,6 @@ trait SparkSpec extends AnyFunSuite {
 
   lazy val sf0001 = "/root/testdata/sf0.001"
 
-  /** See the companion [[SparkSpec.acquire]]. */
-
   /** Drop a managed table AND its warehouse directory — the in-memory
     * catalog forgets tables across JVM restarts while the directory
     * persists, so a bare overwrite hits LOCATION_ALREADY_EXISTS. */
